@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.run.ConfPipeline
 
 /** Run a classic fluent-bit-style config on Spark:
@@ -13,24 +11,18 @@ import graft.run.ConfPipeline
   * }}}
   *
   * The switch path for a reference user: same `[INPUT]/[FILTER]/[OUTPUT]`
-  * sections, same `[PARSER]` definitions, executed as one Catalyst plan
-  * per output over a shared cached core (SURVEY §3.3).
+  * sections, same `[PARSER]` definitions, executed over a shared cached
+  * core (SURVEY §3.3) with one query per WRITING output; every output's
+  * record count is observed inside those writes, so no job only counts
+  * (the contract is on [[graft.run.ConfPipeline.run]]). The session comes
+  * from [[Sessions]]: spark-submit's `--master` wins over the local default.
   */
 object RunConf {
   def main(args: Array[String]): Unit = {
     val confPath = args(0)
     val parsersPath = args(1)
     val outDir = if (args.length > 2) args(2) else "target/conf_out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-conf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-conf")
 
     val loaded = ConfPipeline.load(spark,
       Files.readString(Paths.get(confPath)),

@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.conf.ConfParser
@@ -567,7 +567,6 @@ object ConfPipeline {
     }
   }
 
-  /** Execute the outputs (fan-out: each output sees every matching row). */
   /** Split the conf frame's optional `ts` into the flb_time (sec, nsec)
     * envelope columns every byte-format sink consumes.
     */
@@ -582,108 +581,150 @@ object ConfPipeline {
     (framed, valueCols)
   }
 
+  /** Plugins that write their rows; every other plugin only counts them. */
+  private val Writers = Set("file", "forward", "es", "influxdb", "splunk", "nats", "http")
+
+  /** Execute the outputs (fan-out: each output sees every matching row) over
+    * one cached copy of the filtered frame, and return each output's
+    * (`<plugin>_<index>`, record count) in config order.
+    *
+    * Job contract: a run starts only the jobs its writes need, as Fluent
+    * Bit flushes each chunk once per output and counts from that flush.
+    *   - A writing output ([[Writers]]) counts its records with a
+    *     `Dataset.observe` aggregate on the frame it writes; no count job
+    *     follows.
+    *   - Count-only outputs (`counter`, `null`, `stdout` with its console
+    *     printing elided in batch, `flowcounter` without `ts`, unknown
+    *     plugins) each get a `count_if(Match)` column of ONE observation on
+    *     the cached frame, which rides the first write's query. A config
+    *     with no write runs one aggregate job instead, and so does a run
+    *     whose first write AQE proved empty: it skips the stage that holds
+    *     the observation, which then reports nothing.
+    *   - `flowcounter` with `ts` reports its time-bucket count, one
+    *     aggregate of its own.
+    */
   def run(loaded: Loaded, outDir: String): Seq[(String, Long)] = {
     val cached = loaded.filtered.cache()
     try {
-      loaded.outputs.zipWithIndex.map { case (o, idx) =>
-        val rows = cached.filter(Glob.tagMatches(col("tag"), o.matchGlob))
-        val sinkName = s"${o.plugin}_$idx"
-        val n: Long = o.plugin match {
-          case "file" =>
-            val fmt = o.options.getOrElse("format", "json")
-            val path = o.options.getOrElse("path", s"$outDir/$sinkName")
-            // reference-exact bytes (FileFormat): the record is every key
-            // except the tag envelope and the event time, which rides
-            // beside the map as flb_time (file.c:210-213)
-            val (withTime, valueCols) = withFlbTime(rows)
-            graft.sinks.FileFormat.writeExact(
-              withTime, path, fmt, "tag", "_sec", "_nsec", valueCols)
-            rows.count()
-          case "forward" =>
-            // wire-format frames (sinks/Forward), parquet of binary frames
-            // — the serialization half of out_forward; no socket
-            val path = o.options.getOrElse("path", s"$outDir/$sinkName")
-            val timeAsInt = o.options.get("time_as_integer").exists(_.equalsIgnoreCase("on"))
-            val recCols = rows.columns.filterNot(_ == "tag")
-            graft.sinks.Forward.frames(
-              rows.withColumn("_sec",
-                  if (rows.columns.contains("ts")) unix_timestamp(col("ts")) else lit(0L))
-                .withColumn("_nsec", lit(0))
-                .withColumn("_rec", map(recCols.flatMap(c =>
-                  Seq(lit(c), col(c).cast("string"))): _*))
-                // DOCUMENTED DEVIATION: entry order within a frame is
-                // xxhash64 of the first record column — arbitrary but
-                // deterministic. The reference preserves chunk ARRIVAL
-                // order (msgpack buffer append order); a distributed
-                // shuffle has no arrival order to preserve, and no stable
-                // input ordinal survives the filter chain, so a content
-                // hash stands in. The conf-forward oracle and the frame
-                // round-trip specs compare under this same order.
-                .withColumn("_ord", xxhash64(col(recCols.head))),
-              "tag", "_sec", "_nsec", "_rec", "_ord", timeAsInteger = timeAsInt)
-              .write.mode("overwrite").parquet(path)
-            // count from the WRITTEN table (column-pruned scan) — no
-            // recompute of the frame aggregation, no NPE on empty sinks
-            cached.sparkSession.read.parquet(path)
-              .agg(coalesce(sum(col("n_entries")), lit(0L)))
-              .collect()(0).getLong(0)
-          // payload-serialization sinks: the network client plugins with
-          // the socket replaced by a text file — ONE reference-exact
-          // record payload per line. Reassembling the request body from
-          // the file is per-plugin (documented here because the reference
-          // framings differ): es = the file bytes verbatim (bulk NDJSON);
-          // influxdb = lines joined with a bare newline; splunk = lines
-          // concatenated with NO separator (splunk.c:130); nats/http =
-          // '[' + lines joined ', ' + ']' (one JSON array per request)
-          case "es" | "influxdb" | "splunk" | "nats" | "http" =>
-            val path = o.options.getOrElse("path", s"$outDir/$sinkName")
-            val (withTime, valueCols) = withFlbTime(rows)
-            val (frame, line) = o.plugin match {
-              case "es" =>
-                // esBulkChunk carries its own inner AND trailing newline;
-                // the text writer adds one per row, so strip the trailing
-                // one or the file gains a blank line per record and stops
-                // being a valid bulk body
-                val chunk = graft.sinks.Sinks.esBulkChunk(withTime,
-                  "_sec", "_nsec", valueCols,
-                  index = lit(o.options.getOrElse("index", "fluent-bit")),
-                  esType = o.options.getOrElse("type", "flb_type"))
-                (withTime, chunk.substr(lit(1), length(chunk) - 1))
-              case "influxdb" =>
-                // the reference's _seq is arrival order; batch has no
-                // arrival — a deterministic per-tag ordinal stands in
-                // (documented deviation; the LAYOUT is the contract)
-                import org.apache.spark.sql.expressions.Window
-                // order by the full record INCLUDING the event time —
-                // value-only ordering made ties nondeterministic and an
-                // all-tag/ts frame had an empty (illegal) orderBy
-                val seqd = withTime.withColumn("_seq0",
-                  row_number().over(Window.partitionBy(col("tag"))
-                    .orderBy(valueCols.map(col) ++ Seq(col("_sec"), col("_nsec")): _*))
-                    .cast("long") - 1L)
-                (seqd, graft.sinks.Sinks.influxLine(seqd, "tag", "_seq0",
-                  "_sec", "_nsec", valueCols,
-                  seqName = o.options.getOrElse("sequence_tag", "_seq")))
-              case "splunk" => (withTime,
-                graft.sinks.Sinks.splunkEvent(withTime, "_sec", "_nsec", valueCols))
-              case "nats" => (withTime,
-                graft.sinks.Sinks.natsEntry(withTime, "tag", "_sec", "_nsec", valueCols))
-              case "http" => (withTime, graft.sinks.Sinks.httpJsonRecord(withTime,
-                "_sec", "_nsec", valueCols,
-                dateKey = o.options.getOrElse("json_date_key", "date"),
-                iso8601 = o.options.get("json_date_format").exists(_.equalsIgnoreCase("iso8601"))))
-            }
-            frame.select(line.as("value")).write.mode("overwrite").text(path)
-            rows.count()
-          case "counter" | "null" => rows.count()
-          case "flowcounter" if rows.columns.contains("ts") =>
-            val unit = o.options.getOrElse("unit", "minute")
-            graft.sinks.Sinks.flowCounter(rows, "ts", unit).count()
-          case "stdout" => rows.count() // console printing elided in batch
-          case _        => rows.count()
+      val outs = loaded.outputs.zipWithIndex.map { case (o, idx) =>
+        (o, s"${o.plugin}_$idx", Glob.tagMatches(col("tag"), o.matchGlob))
+      }
+      val buckets = (o: OutputSpec) => o.plugin == "flowcounter" && cached.columns.contains("ts")
+      val countOnly = outs.collect {
+        case (o, name, m) if !Writers(o.plugin) && !buckets(o) => count_if(m).as(name)
+      }
+      val shared = Observation()
+      val firstWrite = outs.indexWhere(o => Writers(o._1.plugin))
+      val own: Map[String, Long] = outs.zipWithIndex.collect {
+        case ((o, name, m), i) if Writers(o.plugin) =>
+          val in =
+            if (i == firstWrite && countOnly.nonEmpty)
+              cached.observe(shared, countOnly.head, countOnly.tail: _*)
+            else cached
+          name -> write(o, in.filter(m), o.options.getOrElse("path", s"$outDir/$name"))
+        case ((o, name, m), _) if buckets(o) =>
+          name -> graft.sinks.Sinks.flowCounter(cached.filter(m), "ts",
+            o.options.getOrElse("unit", "minute")).count()
+      }.toMap
+      // the shared observation is empty when AQE skipped its stage
+      val counted: Map[String, Any] =
+        if (countOnly.isEmpty) Map.empty
+        else Option.when(firstWrite >= 0)(shared.get).filter(_.nonEmpty).getOrElse {
+          val row = cached.agg(countOnly.head, countOnly.tail: _*).collect()(0)
+          row.getValuesMap[Any](row.schema.fieldNames.toSeq)
         }
-        sinkName -> n
+      outs.map { case (_, name, _) =>
+        name -> own.getOrElse(name, counted(name).asInstanceOf[Long])
       }
     } finally { cached.unpersist(); () }
+  }
+
+  /** One writing output's single write of `rows` under `path`; returns the
+    * record count observed on the written frame. The observation sits
+    * right under the write, where AQE cannot prune it away even when the
+    * frame is empty.
+    */
+  private def write(o: OutputSpec, rows: DataFrame, path: String): Long = {
+    val obs = Observation()
+    def observed(frame: DataFrame, n: Column = count(lit(1))) =
+      frame.observe(obs, coalesce(n, lit(0L)).as("n"))
+    o.plugin match {
+      case "file" =>
+        // reference-exact bytes (FileFormat): the record is every key
+        // except the tag envelope and the event time, which rides
+        // beside the map as flb_time (file.c:210-213)
+        val (withTime, valueCols) = withFlbTime(rows)
+        graft.sinks.FileFormat.writeExact(observed(withTime), path,
+          o.options.getOrElse("format", "json"), "tag", "_sec", "_nsec", valueCols)
+      case "forward" =>
+        // wire-format frames (sinks/Forward), parquet of binary frames
+        // — the serialization half of out_forward; no socket
+        val timeAsInt = o.options.get("time_as_integer").exists(_.equalsIgnoreCase("on"))
+        val recCols = rows.columns.filterNot(_ == "tag")
+        val frames = graft.sinks.Forward.frames(
+          rows.withColumn("_sec",
+              if (rows.columns.contains("ts")) unix_timestamp(col("ts")) else lit(0L))
+            .withColumn("_nsec", lit(0))
+            .withColumn("_rec", map(recCols.flatMap(c =>
+              Seq(lit(c), col(c).cast("string"))): _*))
+            // DOCUMENTED DEVIATION: entry order within a frame is
+            // xxhash64 of the first record column — arbitrary but
+            // deterministic. The reference preserves chunk ARRIVAL
+            // order (msgpack buffer append order); a distributed
+            // shuffle has no arrival order to preserve, and no stable
+            // input ordinal survives the filter chain, so a content
+            // hash stands in. The conf-forward oracle and the frame
+            // round-trip specs compare under this same order.
+            .withColumn("_ord", xxhash64(col(recCols.head))),
+          "tag", "_sec", "_nsec", "_rec", "_ord", timeAsInteger = timeAsInt)
+        observed(frames, sum(col("n_entries"))).write.mode("overwrite").parquet(path)
+      // payload-serialization sinks: the network client plugins with
+      // the socket replaced by a text file — ONE reference-exact
+      // record payload per line. Reassembling the request body from
+      // the file is per-plugin (documented here because the reference
+      // framings differ): es = the file bytes verbatim (bulk NDJSON);
+      // influxdb = lines joined with a bare newline; splunk = lines
+      // concatenated with NO separator (splunk.c:130); nats/http =
+      // '[' + lines joined ', ' + ']' (one JSON array per request)
+      case "es" | "influxdb" | "splunk" | "nats" | "http" =>
+        val (withTime, valueCols) = withFlbTime(rows)
+        val (frame, line) = o.plugin match {
+          case "es" =>
+            // esBulkChunk carries its own inner AND trailing newline;
+            // the text writer adds one per row, so strip the trailing
+            // one or the file gains a blank line per record and stops
+            // being a valid bulk body
+            val chunk = graft.sinks.Sinks.esBulkChunk(withTime,
+              "_sec", "_nsec", valueCols,
+              index = lit(o.options.getOrElse("index", "fluent-bit")),
+              esType = o.options.getOrElse("type", "flb_type"))
+            (withTime, chunk.substr(lit(1), length(chunk) - 1))
+          case "influxdb" =>
+            // the reference's _seq is arrival order; batch has no
+            // arrival — a deterministic per-tag ordinal stands in
+            // (documented deviation; the LAYOUT is the contract)
+            import org.apache.spark.sql.expressions.Window
+            // order by the full record INCLUDING the event time —
+            // value-only ordering made ties nondeterministic and an
+            // all-tag/ts frame had an empty (illegal) orderBy
+            val seqd = withTime.withColumn("_seq0",
+              row_number().over(Window.partitionBy(col("tag"))
+                .orderBy(valueCols.map(col) ++ Seq(col("_sec"), col("_nsec")): _*))
+                .cast("long") - 1L)
+            (seqd, graft.sinks.Sinks.influxLine(seqd, "tag", "_seq0",
+              "_sec", "_nsec", valueCols,
+              seqName = o.options.getOrElse("sequence_tag", "_seq")))
+          case "splunk" => (withTime,
+            graft.sinks.Sinks.splunkEvent(withTime, "_sec", "_nsec", valueCols))
+          case "nats" => (withTime,
+            graft.sinks.Sinks.natsEntry(withTime, "tag", "_sec", "_nsec", valueCols))
+          case "http" => (withTime, graft.sinks.Sinks.httpJsonRecord(withTime,
+            "_sec", "_nsec", valueCols,
+            dateKey = o.options.getOrElse("json_date_key", "date"),
+            iso8601 = o.options.get("json_date_format").exists(_.equalsIgnoreCase("iso8601"))))
+        }
+        observed(frame.select(line.as("value"))).write.mode("overwrite").text(path)
+    }
+    obs.get("n").asInstanceOf[Long]
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.parsers.ParserConfLoader
@@ -587,5 +588,115 @@ class ConfPipelineSpec extends AnyFunSuite {
     assert(row.getString(0) == "fw.a")
     assert(row.getLong(1) == 1500000000500000L) // sec + nsec/1e3 carried into ts
     assert(row.getString(2) == "m1" && row.getString(3) == "7")
+  }
+
+  /** `body`'s result and the SQL execution id (null outside one) of every
+    * Spark job it starts. Listener delivery is asynchronous but in order, so
+    * a fence job run before and after `body` bounds exactly its jobs.
+    */
+  private def jobsOf[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Option[java.util.Properties]]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = seen.put(Option(j.properties))
+    }
+    val fenceKey = "graft.spec.fence"
+    def fence(): Unit = {
+      sc.setLocalProperty(fenceKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fenceKey, null)
+    }
+    def isFence(p: Option[java.util.Properties]) = p.exists(_.getProperty(fenceKey) != null)
+    sc.addSparkListener(listener)
+    try {
+      fence(); val result = body; fence()
+      val events = Iterator.continually(
+        Option(seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)).getOrElse(
+          fail("listener never delivered the closing fence job")))
+      result -> events.dropWhile(!isFence(_)).drop(1).takeWhile(!isFence(_))
+        .map(_.map(_.getProperty("spark.sql.execution.id")).orNull).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("conf outputs count from their own writes: no count jobs, empty Match → 0") {
+    val dir = Files.createTempDirectory("graft-conf-jobs").toString
+    mkLog(dir, "app_frontend.log", Seq(200, 500, 503, 404))
+    mkLog(dir, "db_primary.log", Seq(500, 200))
+    def conf(outputs: Seq[String]) =
+      (s"""[INPUT]
+          |    Name   tail
+          |    Path   $dir/*.log
+          |    Tag    logs.*
+          |    Parser apache
+          |
+          |[FILTER]
+          |    Name   grep
+          |    Match  *
+          |    Regex  code ^5
+          |""".stripMargin +: outputs).mkString("\n")
+    def out(plugin: String, glob: String) =
+      s"""[OUTPUT]
+         |    Name  $plugin
+         |    Match $glob
+         |    Path  $dir/out_$plugin
+         |""".stripMargin
+    // a counter before the first write, the forward output's Match hits
+    // nothing, and a second counter after the writes
+    val writes = Seq(out("file", "*app_frontend*"), out("forward", "*nomatch*"),
+      out("es", "*db_primary*"))
+    val all = out("counter", "*") +: writes :+ out("counter", "*db_*")
+    val (results, jobs) = jobsOf(
+      ConfPipeline.run(ConfPipeline.load(spark, conf(all), parsersConf), s"$dir/out"))
+    assert(results.toMap == Map("counter_0" -> 3L, "file_1" -> 2L, "forward_2" -> 0L,
+      "es_3" -> 1L, "counter_4" -> 1L))
+    // every written count equals what reads back from its output
+    import org.apache.spark.sql.functions._
+    val fileRows = spark.read.text(s"$dir/out_file").count()
+    val fwdRows = spark.read.parquet(s"$dir/out_forward")
+      .agg(coalesce(sum(col("n_entries")), lit(0L))).collect()(0).getLong(0)
+    val esRows = spark.read.text(s"$dir/out_es").filter(col("value").startsWith("{\"index\"")).count()
+    assert((fileRows, fwdRows, esRows) == ((2L, 0L, 1L)))
+    // one query per write and nothing else: the counters ride the first
+    // write, so the run starts exactly the jobs of the same writes alone
+    assert(jobs.forall(_ != null), s"a job ran outside any SQL query: $jobs")
+    assert(jobs.distinct.size == writes.size, s"expected one query per write: $jobs")
+    val (_, writeJobs) = jobsOf(
+      ConfPipeline.run(ConfPipeline.load(spark, conf(writes), parsersConf), s"$dir/out"))
+    assert(jobs.size == writeJobs.size, s"$jobs vs writes alone $writeJobs")
+    // file 1 + es 1 + forward 2: AQE runs the frames' tag-grouping shuffle
+    // stage as a job of its own
+    assert(jobs.size == 4, s"$jobs")
+  }
+
+  test("count-only conf: every count from one aggregate query") {
+    val dir = Files.createTempDirectory("graft-conf-counts").toString
+    Files.writeString(Paths.get(dir, "app.log"), "a\nb\nc\n")
+    Files.writeString(Paths.get(dir, "db.log"), "d\n")
+    // no Parser: the frame has no ts, so flowcounter only counts records
+    def conf(outputs: Seq[(String, String)]) =
+      (s"""[INPUT]
+          |    Name tail
+          |    Path $dir/*.log
+          |    Tag  logs.*
+          |""".stripMargin +: outputs.map { case (plugin, glob) =>
+        s"""[OUTPUT]
+           |    Name  $plugin
+           |    Match $glob
+           |    Path  $dir/out_$plugin
+           |""".stripMargin
+      }).mkString("\n")
+    val counters = Seq("counter" -> "*", "null" -> "*db*", "stdout" -> "*nomatch*",
+      "flowcounter" -> "*app*")
+    val (results, jobs) = jobsOf(
+      ConfPipeline.run(ConfPipeline.load(spark, conf(counters), parsersConf), s"$dir/out"))
+    assert(results == Seq("counter_0" -> 4L, "null_1" -> 1L, "stdout_2" -> 0L,
+      "flowcounter_3" -> 3L))
+    assert(jobs.nonEmpty && jobs.forall(_ != null) && jobs.distinct.size == 1,
+      s"expected one aggregate query: $jobs")
+    // a first write whose Match hits nothing: AQE skips the shuffle stage
+    // the counters rode on, and they fall back to the aggregate
+    val emptyFirst = ConfPipeline.run(ConfPipeline.load(spark,
+      conf(("forward" -> "*nomatch*") +: counters), parsersConf), s"$dir/out")
+    assert(emptyFirst == Seq("forward_0" -> 0L, "counter_1" -> 4L, "null_2" -> 1L,
+      "stdout_3" -> 0L, "flowcounter_4" -> 3L))
   }
 }

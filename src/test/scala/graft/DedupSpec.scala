@@ -2,6 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.operators.Dedup
 
@@ -104,18 +108,18 @@ class DedupSpec extends AnyFunSuite {
   test("star round body: window passes, no joins, bounded exchanges (r7 plan pin)") {
     // the round-7 rewrite attaches each star's group minimum via a window
     // over u instead of groupBy+join-back; a regression to the join shape
-    // shows up as Join nodes and extra exchanges in the round plan
+    // shows up as join nodes and extra exchanges in the physical plan
     val edges = Seq((5L, 1L), (4L, 2L), (9L, 4L), (7L, 5L)).toDF("u", "v")
-    val plan = Dedup.starRound(edges).queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"star round must be join-free:\n$plan")
-    val windows = "Window".r.findAllIn(plan).size
-    assert(windows >= 2, s"expected the two star window passes:\n$plan")
-    // per plan section: dir-by-u, folded dedup+window, trailing distinct —
-    // plus the canon-into repartition; anything above 5 is a new shuffle
-    plan.split("== Initial Plan ==").foreach { s =>
-      val ex = "Exchange hashpartitioning".r.findAllIn(s).size
-      assert(ex <= 5, s"star round grew to $ex exchanges:\n$s")
-    }
+    val plan = Dedup.starRound(edges).queryExecution.executedPlan
+    val nodes = PlanNodes.collect(plan) { case p => p }
+    val joins = nodes.collect { case j: BaseJoinExec => j }
+    assert(joins.isEmpty, s"star round must be join-free:\n$plan")
+    val windows = nodes.collect { case w: WindowExec => w }
+    assert(windows.size >= 2, s"expected the two star window passes:\n$plan")
+    // dir-by-u, folded dedup+window, trailing distinct — plus the
+    // canon-into repartition; anything above 5 is a new shuffle
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size <= 5, s"star round grew to ${exchanges.size} exchanges:\n$plan")
   }
 
   test("connectedComponentsStar ≡ connectedComponents ≡ union-find; converges on a 300-node PATH") {
@@ -268,3 +272,6 @@ class DedupSpec extends AnyFunSuite {
     assert(hashed == got)
   }
 }
+
+/** Physical-plan walker that descends into AQE plans and query stages. */
+private object PlanNodes extends AdaptiveSparkPlanHelper
