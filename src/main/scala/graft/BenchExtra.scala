@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *   - `pairs_1x` / `pairs_10x` and their ratio (the OUTPUT growth);
   *   - per-run `runtime growth` from the main bench stays ~12× while the
   *     output grows ~100× ⇒ runtime is sub-linear in output size;
-  *   - `srpBucketStats` truncation counts at the PRODUCTION cap (1000):
+  *   - `srpBucketStats` truncation counts at the PRODUCTION cap
+  *     (`Similarity.MaxBucket`, which also names the JSON keys):
   *     how many buckets the skew guard would clip on each input.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.BenchExtra"
@@ -28,10 +29,11 @@ object BenchExtra {
     try {
       def pairsOut(dir: String): Long =
         SparkEntry.queries("dedup_embed_pairs")(spark, dir).count()
+      val cap = graft.operators.Similarity.MaxBucket
       def bucketAudit(dir: String): (Long, Long, Long) = {
         val e = spark.read.parquet(s"$dir/embeddings.parquet")
         val st = graft.operators.Similarity
-          .srpBucketStats(e, "embedding", planes = 8, maxBucket = 1000)
+          .srpBucketStats(e, "embedding", planes = 8, maxBucket = cap)
           .agg(count(lit(1)), sum(when(col("truncated"), 1L).otherwise(0L)),
             max(col("n")))
           .collect()(0)
@@ -52,7 +54,7 @@ object BenchExtra {
         s"""{"metric":"embed_pairs_audit","pairs_1x":$p1,"pairs_10x":$p10,""" +
           s""""embed_pairs_out_ratio":${math.round(ratio * 10) / 10.0},""" +
           s""""buckets_1x":$b1,"buckets_10x":$b10,""" +
-          s""""truncated_at_cap1000_1x":$t1,"truncated_at_cap1000_10x":$t10,""" +
+          s""""truncated_at_cap${cap}_1x":$t1,"truncated_at_cap${cap}_10x":$t10,""" +
           s""""max_bucket_1x":$m1,"max_bucket_10x":$m10}""")
     } finally spark.stop()
   }

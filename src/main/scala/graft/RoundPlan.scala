@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Dev tool: print the formatted physical plan of ONE iterative-operator
-  * round body (the loop internals that the final-label plan capture of
-  * `Explain dedup_cc_star` cannot show — by round time the edges are a
-  * checkpointed RDD scan). Not part of the driver contract.
+  * round body (the loop internals that the final-label plan printed by
+  * `QueryDebug dedup_cc <dir> explain` cannot show — by round time the
+  * edges are a checkpointed RDD scan). Not part of the driver contract.
   *
-  *   sbt "runMain graft.RoundPlan star [sfDir]"
+  *   sbt "runMain graft.RoundPlan <star|neardup-verify|multiline> [sfDir]"
   */
 object RoundPlan {
   def main(args: Array[String]): Unit = {
@@ -20,28 +20,6 @@ object RoundPlan {
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
     args.headOption.getOrElse("star") match {
       case "star" => graft.operators.Dedup.starRound(edges).explain("formatted")
-      case "star-join" =>
-        // the round-6 groupBy+join round body, kept verbatim for the
-        // before/after plan diff (plans/r07/dedup_cc_star_round_*.txt)
-        def canon(e: org.apache.spark.sql.DataFrame) =
-          e.filter(col("u") =!= col("v"))
-            .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-            .distinct()
-        def largeStar(e: org.apache.spark.sql.DataFrame) = {
-          val dir = e.union(e.select(col("v").as("u"), col("u").as("v")))
-          val mins = dir.groupBy(col("u")).agg(min(col("v")).as("mn"))
-          dir.join(mins, "u")
-            .filter(col("v") > col("u"))
-            .select(col("v").as("u"), least(col("mn"), col("u")).as("v"))
-        }
-        def smallStar(e: org.apache.spark.sql.DataFrame) = {
-          val mins = e.groupBy(col("u")).agg(min(col("v")).as("m"))
-          e.join(mins, "u")
-            .filter(col("v") =!= col("m"))
-            .select(col("v").as("u"), col("m").as("v"))
-            .unionByName(mins.select(col("u"), col("m").as("v")))
-        }
-        canon(smallStar(canon(largeStar(edges)))).explain("formatted")
       case "neardup-verify" =>
         // the curate_neardup candidate-verify subplan (invisible in the
         // final explain — CC consumes it eagerly before the query returns)

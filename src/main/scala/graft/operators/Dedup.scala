@@ -145,97 +145,7 @@ object Dedup {
       .select(col(idCol)).distinct()
   }
 
-  /** Connected components over candidate near-dup pairs — the clustering
-    * step between [[lshCandidatePairs]] / embedding pairs and keeper
-    * selection (every member of a component dedups to the component's
-    * MINIMUM id).
-    *
-    * Iterative min-label propagation with POINTER-JUMPING: each round every
-    * vertex takes the smallest label among itself and its neighbors, then
-    * shortcuts through its own label (`comp ← min(comp, comp(comp))` — the
-    * label is always a node REACHABLE from the vertex, so the label's label
-    * is reachable too), which contracts chain-shaped components in
-    * O(log diameter) rounds instead of O(diameter). All rounds move
-    * fixed-width (long, long) rows only.
-    *
-    * Round cost: ONE Spark action per round — the new labels are LAZILY
-    * `localCheckpoint`ed (lineage truncation without an extra
-    * materialization job) and the convergence probe (`sum(label)`, a
-    * monotone-decreasing fixpoint — no diff join) doubles as the action
-    * that computes and caches them; the previous round's checkpoint blocks
-    * are freed eagerly ([[org.apache.spark.sql.GraftShim.freeLocalCheckpoint]])
-    * so an N-round run holds one label snapshot, not N. RDD-level
-    * checkpoints never register with the session's CacheManager, so a
-    * later identical invocation can never be served from this one's
-    * state — every run recomputes from its inputs.
-    *
-    * @return (id, comp) — comp = min id reachable from id
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.sql.GraftShim.freeLocalCheckpoint
-    val edges = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .union(pairs.select(col(bCol).cast("long").as("a"), col(aCol).cast("long").as("b")))
-      .distinct()
-      .localCheckpoint(eager = false)
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(eager = false)
-    // one action seeds the fixpoint sum AND materializes both checkpoints
-    var prevSum = labels.agg(sum(col("comp"))).collect()(0).getLong(0)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // min over {self} ∪ neighbors as ONE union + groupBy — row-identical
-      // to the join + left-join + coalesce form (every id keeps its own
-      // label via the union arm) with one exchange fewer per round; under
-      // AQE each exchange is its own stage job, so exchange count is the
-      // round's fixed cost
-      val contrib = edges.join(labels, edges("b") === labels("id"))
-        .select(edges("a").as("id"), col("comp"))
-        .unionByName(labels)
-      val once = contrib.groupBy(col("id")).agg(min(col("comp")).as("comp"))
-      // pointer-jumping shortcut (self-join on the fresh labels; the
-      // identical aggregate subtree is computed once via exchange reuse)
-      val byId = once.select(col("id").as("_cid"), col("comp").as("_ccomp"))
-      val next = once.join(byId, once("comp") === byId("_cid"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("_ccomp"), col("comp"))).as("comp"))
-        .localCheckpoint(eager = false)
-      val s = next.agg(sum(col("comp"))).collect()(0).getLong(0)
-      freeLocalCheckpoint(labels)
-      labels = next
-      converged = s == prevSum
-      prevSum = s
-      i += 1
-    }
-    freeLocalCheckpoint(edges)
-    labels
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond" — a
-    * published algorithm, restated on DataFrames):
-    *
-    *   - large-star: every node attaches its LARGER neighbors to the
-    *     minimum of its neighborhood (incl. itself);
-    *   - small-star: every node attaches its smaller-or-equal neighbors
-    *     (its parent candidates) and itself to that minimum.
-    *
-    * Each round is two groupBy-min + join passes over fixed-width (u, v)
-    * pairs (map-side partial min — no hot-node window sort), and the edge
-    * set converges to per-component STARS rooted at the minimum id in
-    * O(log diameter) rounds — the variant for HIGH-DIAMETER graphs where
-    * [[connectedComponents]]' min-label propagation needs O(diameter)
-    * rounds (a 10⁶-link chain: ~20 rounds vs 10⁶). Dedup clusters are
-    * near-cliques, so the simple propagation usually wins on constants;
-    * this is the dial to turn when component diameters blow up.
-    *
-    * Output identical to [[connectedComponents]]: (id, comp = min id of
-    * the component) — shares its oracle (dedup_cc_star) and an
-    * equivalence spec.
-    */
-  private def canonStar(e: DataFrame): DataFrame =
+  private def canon(e: DataFrame): DataFrame =
     e.filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct()
@@ -300,24 +210,57 @@ object Dedup {
 
   /** One large-star/small-star round — exposed for plan capture and specs. */
   private[graft] def starRound(e: DataFrame): DataFrame =
-    canonStar(smallStar(canonInto(largeStar(e))))
+    canon(smallStar(canonInto(largeStar(e))))
 
-  def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
-                              maxIter: Int = 30): DataFrame = {
-    def canon(e: DataFrame): DataFrame = canonStar(e)
-
+  /** Connected components over candidate near-dup pairs — the clustering
+    * step between [[lshCandidatePairs]] / embedding pairs and keeper
+    * selection (every member of a component dedups to the component's
+    * MINIMUM id).
+    *
+    * Alternating LARGE-STAR / SMALL-STAR rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond" — a published
+    * algorithm, restated on DataFrames):
+    *
+    *   - large-star: every node attaches its LARGER neighbors to the
+    *     minimum of its neighborhood (incl. itself);
+    *   - small-star: every node attaches its smaller-or-equal neighbors
+    *     (its parent candidates) and itself to that minimum.
+    *
+    * Each round is two window-min passes over fixed-width (u, v) pairs
+    * with no join ([[starRound]], plan pinned by DedupSpec), and the edge
+    * set converges to per-component STARS rooted at the minimum id in
+    * O(log diameter) rounds (a 10⁶-link chain: ~20 rounds).
+    *
+    * Round cost: ONE Spark action per round — the round's edge set is
+    * LAZILY `localCheckpoint`ed and the change probe (count, Σ xxhash64)
+    * doubles as the action that computes and caches it; the previous
+    * round's checkpoint blocks are freed eagerly
+    * ([[org.apache.spark.sql.GraftShim.freeLocalCheckpoint]]) so an
+    * N-round run holds one edge snapshot, not N. RDD-level checkpoints
+    * never register with the session's CacheManager, so a later identical
+    * invocation can never be served from this one's state — every run
+    * recomputes from its inputs.
+    *
+    * Fails (IllegalArgumentException) when `maxIter` rounds do not reach
+    * the fixpoint: a non-fixpoint edge set is not a star forest, so its
+    * labels would be wrong.
+    *
+    * @return (id, comp) — comp = min id reachable from id; a node whose
+    *         only pairs are self-loops is its own component
+    */
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+                          maxIter: Int = 30): DataFrame = {
     import org.apache.spark.sql.GraftShim.freeLocalCheckpoint
-    var edges = canon(pairs.select(col(aCol).cast("long").as("u"),
-      col(bCol).cast("long").as("v"))).localCheckpoint(eager = false)
+    // the projected input is checkpointed with the first round's edges, so
+    // the node census at the end reads cached (u, v) rows instead of
+    // re-running the pairs' own plan (LSH + verify in a dedup pipeline)
+    val input = pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
+      .localCheckpoint(eager = false)
+    var edges = canon(input).localCheckpoint(eager = false)
     // change detection: (count, Σ xxhash64(u,v)) — order-independent and
-    // collision-resistant where the old (count, Σu, Σv) triple let distinct
+    // collision-resistant where a (count, Σu, Σv) triple lets distinct
     // edge sets alias (e.g. {(5,1),(4,2)} vs {(4,1),(5,2)}); decimal(38)
-    // sum keeps the aggregate exact under ANSI (long sum would overflow).
-    // The signature probe doubles as the action that computes and caches
-    // the round's LAZILY-checkpointed edge set — ONE Spark job per round
-    // (the former eager-checkpoint-then-probe shape ran two); the previous
-    // round's checkpoint blocks are freed eagerly (one snapshot held, not
-    // N rounds' worth).
+    // sum keeps the aggregate exact under ANSI (long sum would overflow)
     def sigOf(e: DataFrame) =
       e.agg(count(lit(1)),
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).collect()(0)
@@ -333,10 +276,8 @@ object Dedup {
       sig = s
       i += 1
     }
-    // a non-fixpoint edge set is NOT a star forest — labels would be wrong;
-    // fail loudly instead of silently emitting them
     require(converged,
-      s"connectedComponentsStar did not converge within $maxIter rounds — " +
+      s"connectedComponents did not converge within $maxIter rounds — " +
         "raise maxIter (rounds needed ≈ log₂ of the max component diameter)")
     // fixpoint = stars: non-roots point straight at their component min;
     // roots never appear on the left side (edges is the final round's
@@ -345,9 +286,9 @@ object Dedup {
       .unionByName(edges.select(col("v")).distinct()
         .select(col("v").as("id"), col("v").as("comp")))
     // nodes whose only pairs were self-loops vanish in canon's u≠v filter
-    // but are components of their own ([[connectedComponents]] keeps them)
-    val allNodes = pairs.select(col(aCol).cast("long").as("id"))
-      .union(pairs.select(col(bCol).cast("long").as("id"))).distinct()
+    // but are components of their own
+    val allNodes = input.select(col("u").as("id"))
+      .union(input.select(col("v").as("id"))).distinct()
     labels.unionByName(
       allNodes.join(labels, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("comp")))

@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Production SRP bucket cap: the default `maxBucket` of
+    * [[embeddingNearDupPairs]] and [[srpBucketStats]].
+    */
+  val MaxBucket: Int = 1000
+
   /** Σ aᵢ·bᵢ as a sequential left fold (deterministic fp order). Fused
     * one-pass expression — the composable [[dotColumns]] is a
     * CodegenFallback higher-order function, interpreted per element;
@@ -222,7 +227,7 @@ object Similarity {
     */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, planes: Int = 8,
-                            maxBucket: Int = 1000): DataFrame = {
+                            maxBucket: Int = MaxBucket): DataFrame = {
     val b = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("_bucket", srpBucket(col("v"), planes))
     val buckets = b
@@ -278,7 +283,7 @@ object Similarity {
     * `maxBucket` cap would drop (the no-silent-caps companion).
     */
   def srpBucketStats(df: DataFrame, vecCol: String, planes: Int,
-                     maxBucket: Int): DataFrame =
+                     maxBucket: Int = MaxBucket): DataFrame =
     df.select(srpBucket(col(vecCol), planes).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
       .withColumn("truncated", col("n") > maxBucket)

@@ -83,26 +83,72 @@ class DedupSpec extends AnyFunSuite {
     assert(e == ((0, 1)))
   }
 
+  /** Driver union-find reference: node → min id of its component, over
+    * every node that appears in a pair (self-loops included).
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(i => i -> find(i)).toMap
+  }
+
+  /** Labels from [[Dedup.connectedComponents]] as node → comp, checking
+    * that no node gets two labels.
+    */
+  private def cc(edges: Seq[(Long, Long)], maxIter: Int = 30): Map[Long, Long] = {
+    val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b", maxIter)
+      .as[(Long, Long)].collect()
+    assert(got.map(_._1).distinct.length == got.length, "one label per node")
+    got.toMap
+  }
+
   test("connectedComponents equals driver-side union-find on a deterministic graph") {
-    // edges: chains (i, i+1) broken at i%7==6, plus long-range links
-    // (i, i+13) when i%11==0 — merges chains into larger components
-    val edges = (0L until 200L).flatMap { i =>
+    // chains (i, i+1) broken at i%7==6, plus long-range links (i, i+13)
+    // when i%11==0 — merges chains into larger components
+    val chains = (0L until 200L).flatMap { i =>
       val chain = if (i % 7 != 6 && i + 1 < 200) Seq((i, i + 1)) else Nil
       val far = if (i % 11 == 0 && i + 13 < 200) Seq((i, i + 13)) else Nil
       chain ++ far
     }
-    // driver union-find reference
-    val parent = scala.collection.mutable.Map((0L until 200L).map(i => i -> i): _*)
-    def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    assert(cc(chains) == unionFind(chains))
+    // dedup-shaped traffic (curate_neardup, the curation layer): disjoint
+    // cliques of size 2–6 as verified LSH pairs (id_a < id_b), members
+    // scattered over the id space (k·37 mod 1009) so a clique's minimum
+    // is not tied to its members' generation order
+    val sizes = Iterator.continually(2 to 6).flatten.take(40).toSeq
+    val ids = (0L until sizes.sum.toLong).map(k => (k * 37L) % 1009L)
+    val cliques = sizes.scanLeft(0)(_ + _).zip(sizes).flatMap { case (off, n) =>
+      val m = ids.slice(off, off + n)
+      for (x <- m; y <- m if x < y) yield (x, y)
     }
-    val inEdges = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    val want = inEdges.map(i => i -> find(i)).toMap
+    val cliqueLabels = cc(cliques)
+    assert(cliqueLabels == unionFind(cliques))
+    assert(cliqueLabels.values.toSet.size == sizes.size)
+  }
 
-    val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
-    assert(got == want)
+  // the name dates from when the star variant was a second operator; it is
+  // now connectedComponents itself, so every case is checked against union-find
+  test("connectedComponentsStar ≡ connectedComponents ≡ union-find; converges on a 300-node PATH") {
+    // the high-diameter case: a 300-link path needs O(log) star rounds —
+    // maxIter 12 must fully collapse it to comp 0
+    val path = (0L until 300L).map(i => (i, i + 1))
+    val pathLabels = cc(path, maxIter = 12)
+    assert(pathLabels == unionFind(path))
+    assert(pathLabels.size == 301 && pathLabels.values.forall(_ == 0L))
+    // empty input → empty labels (no crash on the fixpoint probe)
+    assert(cc(Nil).isEmpty)
+    // a node whose ONLY pair is a self-loop stays a singleton component
+    // (canon's u≠v filter must not lose it)
+    val selfy = Seq((1L, 2L), (9L, 9L))
+    val selfyLabels = cc(selfy)
+    assert(selfyLabels == unionFind(selfy))
+    assert(selfyLabels == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
   }
 
   test("star round body: window passes, no joins, bounded exchanges (r7 plan pin)") {
@@ -120,38 +166,6 @@ class DedupSpec extends AnyFunSuite {
     // canon-into repartition; anything above 5 is a new shuffle
     val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.size <= 5, s"star round grew to ${exchanges.size} exchanges:\n$plan")
-  }
-
-  test("connectedComponentsStar ≡ connectedComponents ≡ union-find; converges on a 300-node PATH") {
-    // same mixed graph as above: star variant must agree with both
-    val edges = (0L until 200L).flatMap { i =>
-      val chain = if (i % 7 != 6 && i + 1 < 200) Seq((i, i + 1)) else Nil
-      val far = if (i % 11 == 0 && i + 13 < 200) Seq((i, i + 13)) else Nil
-      chain ++ far
-    }
-    val viaProp = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
-    val viaStar = Dedup.connectedComponentsStar(edges.toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toMap
-    assert(viaStar == viaProp)
-    // the high-diameter case the variant exists for: a 300-link path needs
-    // ~300 min-label rounds but only O(log) star rounds — maxIter 12 must
-    // fully collapse it to comp 0
-    val path = (0L until 300L).map(i => (i, i + 1))
-    val star = Dedup.connectedComponentsStar(path.toDF("a", "b"), "a", "b", maxIter = 12)
-      .as[(Long, Long)].collect()
-    assert(star.length == 301 && star.forall(_._2 == 0L))
-    // empty input → empty labels (no crash on the fixpoint probe)
-    assert(Dedup.connectedComponentsStar(
-      Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b").count() == 0)
-    // a node whose ONLY pair is a self-loop stays a singleton component
-    // (canon's u≠v filter must not lose it — parity with the propagation
-    // variant, which keeps (9,9) through its symmetric-union distinct)
-    val selfy = Seq((1L, 2L), (9L, 9L)).toDF("a", "b")
-    val lbl = Dedup.connectedComponentsStar(selfy, "a", "b")
-      .as[(Long, Long)].collect().toMap
-    assert(lbl == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
-    assert(lbl == Dedup.connectedComponents(selfy, "a", "b").as[(Long, Long)].collect().toMap)
   }
 
   test("decontamination: twins of benchmark docs flagged; corpus side joins via broadcast") {
@@ -182,7 +196,7 @@ class DedupSpec extends AnyFunSuite {
     // and emitting non-star labels silently would be wrong answers
     val path = (0L until 300L).map(i => (i, i + 1))
     val ex = intercept[IllegalArgumentException] {
-      Dedup.connectedComponentsStar(path.toDF("a", "b"), "a", "b", maxIter = 2)
+      Dedup.connectedComponents(path.toDF("a", "b"), "a", "b", maxIter = 2)
     }
     assert(ex.getMessage.contains("did not converge"))
   }
