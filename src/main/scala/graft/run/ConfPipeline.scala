@@ -44,20 +44,20 @@ import graft.sources.{Samplers, TailSource}
   */
 object ConfPipeline {
 
-  /** A flattened record key colliding with a frame column name is
+  /** `lead` columns, then one column per key of the `_rec` map column.
+    * A record key colliding with a `reserved` (lead) column name is
     * prefix-uniquified (re-prefixing until unused): a record carrying
     * BOTH the reserved name and its prefixed form must not produce
     * duplicate output columns — the reference keeps record keys in
     * their own msgpack namespace; flattening to columns conflates the
     * two. Shared by every face that flattens records (forward, mqtt).
     */
-  private def uniquifyKey(k: String, keys: Seq[String], reserved: Set[String]): String =
-    if (!reserved(k)) k
-    else {
-      var cand = "_" + k
-      while (keys.contains(cand)) cand = "_" + cand
-      cand
-    }
+  private def withRecordColumns(raw: DataFrame, lead: Seq[Column], reserved: Set[String],
+                                keys: Seq[String]): DataFrame = {
+    def unique(k: String): String =
+      if (!reserved(k)) k else Iterator.iterate("_" + k)("_" + _).find(!keys.contains(_)).get
+    raw.select(lead ++ keys.map(k => col("_rec").getItem(k).as(unique(k))): _*)
+  }
 
   /** Size values with optional binary-ish suffix, exactly
     * `flb_utils_size_to_bytes` (`src/flb_utils.c:312-376`): suffix is the
@@ -134,28 +134,41 @@ object ConfPipeline {
         case None => default
       }
 
+    // an input Parser flattens each line; Time_Key AND Time_Format stamp
+    // the record time (the reference's in_tail parse path) — gives
+    // throttle/lua/flowcounter a ts column to work on. A key without a
+    // format would add an all-null ts that flips those filters from no-op
+    // to actively bucketing everything into null
+    def parseLines(df: DataFrame, p: ParserDef): DataFrame = {
+      val parsed = ParserFilter.flatten("line", p)(df)
+      if (p.timeKey.isDefined && p.timeFormat.isDefined)
+        parsed.withColumn("ts", p.eventTime(col("line")))
+      else parsed
+    }
+    def withInputParser(s: ConfParser.Section, df: DataFrame): DataFrame =
+      inputParser(s).fold(df)(parseLines(df, _))
+
+    // a section without a key it needs is a config error
+    def required(s: ConfParser.Section, k: String, what: String): String =
+      s.get(k).getOrElse(throw new IllegalArgumentException(s"$what needs $k"))
+
+    // boolean sampler options: true OR on enables, anything else is off
+    def flag(s: ConfParser.Section, k: String): Boolean = s.get(k).exists(v =>
+      v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on"))
+
+    // network faces drain until the socket has been quiet for Quiet_Ms,
+    // giving up after Timeout_Ms
+    def drainWindow(s: ConfParser.Section): (Long, Long) =
+      (s.get("Quiet_Ms").map(_.toLong).getOrElse(300L),
+        s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L))
+
     // ---- INPUT (first supported section wins; multiple inputs → union)
     val inputs = sections.filter(_.name == "INPUT").map { s =>
       s.get("Name").map(_.toLowerCase) match {
         case Some("tail") =>
-          val path = s.get("Path").getOrElse(
-            throw new IllegalArgumentException("tail input needs Path"))
+          val path = required(s, "Path", "tail input")
           val tag = s.get("Tag").getOrElse("*")
-          val df = TailSource.lines(spark, path, tag)
-          inputParser(s) match {
-            case Some(p) =>
-              val parsed = ParserFilter.flatten("line", p)(df)
-              // tail+parser stamps the record time from Time_Key (the
-              // reference's in_tail parse path) — gives throttle/lua/
-              // flowcounter a ts column to work on. Both Time_Key AND
-              // Time_Format must be set: a key without a format would add
-              // an all-null ts that flips those filters from no-op to
-              // actively bucketing everything into null
-              if (p.timeKey.isDefined && p.timeFormat.isDefined)
-                parsed.withColumn("ts", p.eventTime(col("line")))
-              else parsed
-            case None => df
-          }
+          withInputParser(s, TailSource.lines(spark, path, tag))
         case Some("dummy") =>
           val n = s.get("Samples").map(_.toLong).getOrElse(1000L)
           val tag = s.get("Tag").getOrElse("dummy.0")
@@ -166,28 +179,16 @@ object ConfPipeline {
           // in_head: first Lines lines / Buf_Size bytes per file; content
           // lands in the conf frame's `line` column (record key deviation
           // documented on HeadSource)
-          val file = s.get("File").getOrElse(
-            throw new IllegalArgumentException("head input needs File"))
+          val file = required(s, "File", "head input")
           val tag = s.get("Tag").getOrElse("head.0")
           graft.sources.HeadSource(spark, file, tag,
             lines = s.get("Lines").map(_.toInt).getOrElse(0),
             bytes = s.get("Buf_Size").map(ConfPipeline.sizeToBytes).getOrElse(256L),
             key = "line")
         case Some("exec") =>
-          val cmd = s.get("Command").getOrElse(
-            throw new IllegalArgumentException("exec input needs Command"))
+          val cmd = required(s, "Command", "exec input")
           val tag = s.get("Tag").getOrElse("exec.0")
-          val df = graft.sources.ExecSource(spark, cmd, tag)
-          inputParser(s) match {
-            case Some(p) =>
-              val parsed = ParserFilter.flatten("line", p)(df)
-              // same ts stamping as tail+Parser — throttle/flowcounter
-              // must behave identically over either input
-              if (p.timeKey.isDefined && p.timeFormat.isDefined)
-                parsed.withColumn("ts", p.eventTime(col("line")))
-              else parsed
-            case None => df
-          }
+          withInputParser(s, graft.sources.ExecSource(spark, cmd, tag))
         case Some("stdin") =>
           // in_stdin (in_stdin.c:88-180): read stdin to EOF. The
           // reference's DEFAULT mode consumes a newline-AGNOSTIC stream
@@ -199,16 +200,9 @@ object ConfPipeline {
           // fails the buffer) and each value json-parses; an explicit
           // Parser handles newline-split lines (in_stdin.c:150-168).
           val tag = s.get("Tag").getOrElse("stdin.0")
-          def flattenWith(df: org.apache.spark.sql.DataFrame,
-                          p: graft.parsers.ParserDef) = {
-            val parsed = ParserFilter.flatten("line", p)(df)
-            if (p.timeKey.isDefined && p.timeFormat.isDefined)
-              parsed.withColumn("ts", p.eventTime(col("line")))
-            else parsed
-          }
           (inputParser(s), parsers.get("json")) match {
             case (Some(p), _) => // explicit Parser: per-line records
-              flattenWith(graft.sources.StdinSource(
+              parseLines(graft.sources.StdinSource(
                 spark, graft.sources.StdinSource.stream(), tag), p)
             case (None, Some(json)) => // default JSON-value-stream mode
               import spark.implicits._
@@ -216,7 +210,7 @@ object ConfPipeline {
                 graft.sources.StdinSource.stream().readAllBytes(),
                 java.nio.charset.StandardCharsets.UTF_8)
               val values = graft.sources.Serial.jsonStream(text)
-              flattenWith(values.toDF("line")
+              parseLines(values.toDF("line")
                 .withColumn("file", lit("stdin"))
                 .withColumn("tag", lit(tag)), json)
             case (None, None) => // no parser anywhere: raw line frame
@@ -237,8 +231,7 @@ object ConfPipeline {
           // messages) and unix_tcp to the localhost TCP listener; plain
           // `udp` is accepted as an alias for the datagram face. in_tcp
           // has no Mode and always streams TCP.
-          val port = s.get("Port").map(_.toInt).getOrElse(
-            throw new IllegalArgumentException("tcp/syslog input needs Port"))
+          val port = required(s, "Port", "tcp/syslog input").toInt
           val tag = s.get("Tag").getOrElse(s.get("Name").get.toLowerCase + ".0")
           val isSyslog = s.get("Name").get.equalsIgnoreCase("syslog")
           val mode = s.get("Mode").map(_.toLowerCase) match {
@@ -250,8 +243,7 @@ object ConfPipeline {
               throw new IllegalArgumentException(s"tcp input has no Mode (got $m)")
             case None => if (isSyslog) "unix_udp" else "tcp"
           }
-          val quietMs = s.get("Quiet_Ms").map(_.toLong).getOrElse(300L)
-          val timeoutMs = s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L)
+          val (quietMs, timeoutMs) = drainWindow(s)
           val df =
             if (mode == "unix_udp" || mode == "udp") {
               val l = graft.sources.NetworkSources.listenUdp(port)
@@ -267,14 +259,7 @@ object ConfPipeline {
                   s"[conf-${s.get("Name").get.toLowerCase}] deferred $deferred unterminated tail bytes (open connection mid-line)")
               graft.sources.NetworkSources.lineRows(spark, payloads, tag)
             }
-          inputParser(s) match {
-            case Some(p) =>
-              val parsed = ParserFilter.flatten("line", p)(df)
-              if (p.timeKey.isDefined && p.timeFormat.isDefined)
-                parsed.withColumn("ts", p.eventTime(col("line")))
-              else parsed
-            case None => df
-          }
+          withInputParser(s, df)
         case Some("forward") =>
           // in_forward (fw_prot.c): drain msgpack frames, decode leniently,
           // and surface each entry as columns — tag, ts (from the fixext8
@@ -282,12 +267,9 @@ object ConfPipeline {
           // the drained batch; the batch already passed through the
           // driver's accept loop, so the driver-side key scan adds nothing)
           val port = s.get("Port").map(_.toInt).getOrElse(24224)
+          val (quietMs, timeoutMs) = drainWindow(s)
           val l = graft.sources.NetworkSources.listen(port)
-          val payloads =
-            try l.drainUntilQuiet(
-              s.get("Quiet_Ms").map(_.toLong).getOrElse(300L),
-              s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L))
-            finally l.close()
+          val payloads = try l.drainUntilQuiet(quietMs, timeoutMs) finally l.close()
           val decoded = payloads.map(graft.sinks.MsgpackDecode.unpackFramesLenient)
           val skipped = decoded.map(_._2).sum
           if (skipped > 0)
@@ -302,12 +284,8 @@ object ConfPipeline {
             .flatMap { case (t, es) => es.map(e => (t, micros(e.sec, e.nsec), e.record)) }
           val keys = entries.flatMap(_._3.keys).distinct.sorted
           import spark.implicits._
-          val raw = entries.toDF("tag", "_fus", "_rec")
-          raw.select(
-            col("tag") +:
-              timestamp_micros(col("_fus")).as("ts") +:
-              keys.map(k =>
-                col("_rec").getItem(k).as(uniquifyKey(k, keys, Set("tag", "ts")))): _*)
+          withRecordColumns(entries.toDF("tag", "_fus", "_rec"),
+            Seq(col("tag"), timestamp_micros(col("_fus")).as("ts")), Set("tag", "ts"), keys)
         case Some(n @ ("mem" | "cpu" | "disk" | "netif" | "proc" | "health")) =>
           // metric sampler faces (driver-side /proc readers / TCP probe,
           // graft.sources.Samplers): interval semantics follow the
@@ -324,14 +302,11 @@ object ConfPipeline {
             case "disk" =>
               Samplers.disk(spark, tag, devName = s.get("Dev_Name"), interval)
             case "netif" =>
-              val iface = s.get("Interface").getOrElse(
-                throw new IllegalArgumentException("netif input needs Interface"))
+              val iface = required(s, "Interface", "netif input")
               Samplers.netif(spark, iface, tag, interval,
-                verbose = s.get("Verbose").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")))
+                verbose = flag(s, "Verbose"))
             case "proc" =>
-              val name = s.get("Proc_Name").getOrElse(
-                throw new IllegalArgumentException("proc input needs Proc_Name"))
+              val name = required(s, "Proc_Name", "proc input")
               // in_proc.c:192-210: false OR off disables (true/on enables,
               // anything else keeps the default-on)
               def offish(k: String) = s.get(k).exists(v =>
@@ -339,20 +314,13 @@ object ConfPipeline {
               Samplers.proc(spark, name, tag,
                 mem = !offish("Mem"),
                 fds = !offish("Fd"),
-                alert = s.get("Alert").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")))
+                alert = flag(s, "Alert"))
             case "health" =>
-              val host = s.get("Host").getOrElse(
-                throw new IllegalArgumentException("health input needs Host"))
-              val port = s.get("Port").map(_.toInt).getOrElse(
-                throw new IllegalArgumentException("health input needs Port"))
+              val host = required(s, "Host", "health input")
+              val port = required(s, "Port", "health input").toInt
               Samplers.health(spark, host, port, tag,
-                addHost = s.get("Add_Host").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")),
-                addPort = s.get("Add_Port").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")),
-                alert = s.get("Alert").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")))
+                addHost = flag(s, "Add_Host"), addPort = flag(s, "Add_Port"),
+                alert = flag(s, "Alert"))
           }
         case Some("mqtt") =>
           // in_mqtt (mqtt_prot.c): an embedded MQTT 3.1.1 broker listens on
@@ -365,12 +333,9 @@ object ConfPipeline {
           // forward face — the batch already passed the accept loop.
           val port = s.get("Port").map(_.toInt).getOrElse(1883)
           val tag = s.get("Tag").getOrElse("mqtt.0")
+          val (quietMs, timeoutMs) = drainWindow(s)
           val b = graft.sources.Mqtt.broker(port)
-          val msgs =
-            try b.drainUntilQuiet(
-              s.get("Quiet_Ms").map(_.toLong).getOrElse(300L),
-              s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L))
-            finally b.close()
+          val msgs = try b.drainUntilQuiet(quietMs, timeoutMs) finally b.close()
           val parsed = msgs.flatMap { case (topic, payload) =>
             graft.sources.Mqtt.jsonFlat(new String(payload, "UTF-8")) match {
               case Some(kvs) => Some((topic, kvs.toMap))
@@ -381,11 +346,8 @@ object ConfPipeline {
           }
           val keys = parsed.flatMap(_._2.keys).distinct.sorted
           import spark.implicits._
-          val raw = parsed.toDF("topic", "_rec").withColumn("tag", lit(tag))
-          raw.select(
-            col("topic") +: col("tag") +:
-              keys.map(k =>
-                col("_rec").getItem(k).as(uniquifyKey(k, keys, Set("topic", "tag")))): _*)
+          withRecordColumns(parsed.toDF("topic", "_rec").withColumn("tag", lit(tag)),
+            Seq(col("topic"), col("tag")), Set("topic", "tag"), keys)
         case Some("kmsg") =>
           // in_kmsg (in_kmsg.c:108-210): kernel-log lines → {priority,
           // sequence, sec, usec, msg} with boot-relative event time (boot
@@ -405,8 +367,7 @@ object ConfPipeline {
           // in_serial.c — Separator split / Format json stream / whole
           // chunk as one msg. Bitrate/Min_Bytes are tty ioctls: accepted
           // and ignored offline.
-          val file = s.get("File").getOrElse(
-            throw new IllegalArgumentException("serial input needs File"))
+          val file = required(s, "File", "serial input")
           val tag = s.get("Tag").getOrElse("serial.0")
           val text = new String(
             java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)), "UTF-8")
@@ -495,10 +456,8 @@ object ConfPipeline {
           // lua.c:330-393 semantics over a registered Scala function; the
           // callback runs ONLY on matching rows (it can drop), the rest
           // pass through untouched
-          val script = s.get("script").getOrElse(
-            throw new IllegalArgumentException("lua filter needs script"))
-          val callName = s.get("call").getOrElse(
-            throw new IllegalArgumentException("lua filter needs call"))
+          val script = required(s, "script", "lua filter")
+          val callName = required(s, "call", "lua filter")
           val fn = Scripted.LuaRegistry.resolve(script, callName)
           if (matchGlob == "*") Scripted.applyLua(df, fn)
           else {

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -25,4 +26,10 @@ object GraftShim {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** Block until the listener bus has delivered every queued event
+    * (`listenerBus` is `private[spark]`): a listener's counters read
+    * after this hold every event the caller's finished actions caused.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

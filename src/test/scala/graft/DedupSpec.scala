@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -157,7 +156,7 @@ class DedupSpec extends AnyFunSuite {
     // shows up as join nodes and extra exchanges in the physical plan
     val edges = Seq((5L, 1L), (4L, 2L), (9L, 4L), (7L, 5L)).toDF("u", "v")
     val plan = Dedup.starRound(edges).queryExecution.executedPlan
-    val nodes = PlanNodes.collect(plan) { case p => p }
+    val nodes = QueryCensus.nodes(plan)
     val joins = nodes.collect { case j: BaseJoinExec => j }
     assert(joins.isEmpty, s"star round must be join-free:\n$plan")
     val windows = nodes.collect { case w: WindowExec => w }
@@ -286,6 +285,3 @@ class DedupSpec extends AnyFunSuite {
     assert(hashed == got)
   }
 }
-
-/** Physical-plan walker that descends into AQE plans and query stages. */
-private object PlanNodes extends AdaptiveSparkPlanHelper

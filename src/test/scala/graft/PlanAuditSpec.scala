@@ -1,6 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Grep
@@ -10,12 +18,12 @@ import graft.sources.TokenTable
 
 /** Physical-plan invariants of the headline pipeline — the properties that
   * make it hold at 100 TB. Each one regressed at least once during
-  * development; asserting on the plan string keeps them pinned.
+  * development; asserting on the physical plan keeps them pinned.
   */
 class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def headlinePlan(withEnrich: Boolean): String = {
+  private def headlinePlan(withEnrich: Boolean): SparkPlan = {
     val t = TokenTable.synthetic(spark, 1000, 4)
     val dim = spark.range(0, 10).select(
       concat(lit("web-"), col("id").cast("string"), lit("_default")).as("pod_key"),
@@ -27,11 +35,27 @@ class PlanAuditSpec extends AnyFunSuite {
     val out = Pipeline.transform(t, spec)
       .groupBy(col("sink")).agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("s"))
     out.collect()
-    out.queryExecution.executedPlan.toString
+    out.queryExecution.executedPlan
+  }
+
+  /** The physical nodes of each plan section: under AQE the final plan and
+    * the initial one (both print in the plan string), else the one plan.
+    */
+  private def sections(plan: SparkPlan): Seq[Seq[SparkPlan]] = plan match {
+    case a: AdaptiveSparkPlanExec => Seq(QueryCensus.nodes(a), QueryCensus.nodes(a.initialPlan))
+    case p => Seq(QueryCensus.nodes(p))
+  }
+
+  // a reused exchange prints as its original "Exchange hashpartitioning",
+  // so it counts as the text match counted it
+  private def hashShuffles(nodes: Seq[SparkPlan]): Int = nodes.count {
+    case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
+    case ReusedExchangeExec(_, e: ShuffleExchangeExec) => e.outputPartitioning.isInstanceOf[HashPartitioning]
+    case _ => false
   }
 
   test("headline pipeline: the fused apache parse evaluates ONCE per row") {
-    val plan = headlinePlan(withEnrich = false)
+    val plan = headlinePlan(withEnrich = false).toString
     // filter pushdown substitutes the parse alias into every reference of
     // the grep predicate — a two-reference predicate doubles the parse
     val n = "regexparse".r.findAllIn(plan.toLowerCase).size
@@ -41,15 +65,19 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("headline pipeline: broadcast enrich, partial agg before the single exchange") {
     val plan = headlinePlan(withEnrich = true)
-    assert(plan.contains("BroadcastHashJoin"), "enrich must be a broadcast join")
-    assert(!plan.contains("SortMergeJoin"), "no shuffle join on the fact side")
-    assert(plan.contains("partial_count"), "map-side partial aggregation must ride the fan-out")
-    // exactly one data exchange per plan section (the sink agg); the only
-    // other exchange is the dim broadcast
-    val sections = plan.split("== Initial Plan ==")
-    sections.foreach { s =>
-      val shuffles = "Exchange hashpartitioning".r.findAllIn(s).size
-      assert(shuffles == 1, s"expected 1 shuffle, saw $shuffles in:\n$s")
+    sections(plan).foreach { nodes =>
+      assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"enrich must be a broadcast join:\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"no shuffle join on the fact side:\n$plan")
+      val partialCount = nodes.exists {
+        case h: HashAggregateExec => h.aggregateExpressions.exists(e =>
+          e.mode == Partial && e.aggregateFunction.isInstanceOf[Count])
+        case _ => false
+      }
+      assert(partialCount, s"map-side partial aggregation must ride the fan-out:\n$plan")
+      // exactly one data exchange per plan section (the sink agg); the only
+      // other exchange is the dim broadcast
+      val shuffles = hashShuffles(nodes)
+      assert(shuffles == 1, s"expected 1 shuffle, saw $shuffles in:\n$plan")
     }
   }
 
@@ -84,11 +112,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // of the raw line stream at log scale (round-3 review item)
     val q = SparkEntry.queries("fb_multiline")(spark, "/root/testdata/sf0.001")
     q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-    val sections = plan.split("== Initial Plan ==")
-    sections.foreach { s =>
-      val shuffles = "Exchange hashpartitioning".r.findAllIn(s).size
-      assert(shuffles == 1, s"expected 1 shuffle, saw $shuffles in:\n$s")
+    val plan = q.queryExecution.executedPlan
+    sections(plan).foreach { nodes =>
+      val shuffles = hashShuffles(nodes)
+      assert(shuffles == 1, s"expected 1 shuffle, saw $shuffles in:\n$plan")
     }
   }
 
@@ -101,22 +128,26 @@ class PlanAuditSpec extends AnyFunSuite {
     // Pin both shapes so growth at the boundary is an asserted flip, not
     // a re-rolled surprise.
     val dir = "/root/testdata/sf0.001"
-    def plan(): String = {
+    def plan(): SparkPlan = {
       val q = SparkEntry.queries("q_anti_join")(spark, dir)
       q.collect()
-      q.queryExecution.executedPlan.toString
+      q.queryExecution.executedPlan
     }
     // 1× shape: orders fits the default 10 MB threshold → broadcast anti
     val small = plan()
-    assert(small.contains("BroadcastHashJoin") && small.contains("LeftAnti"),
-      s"expected broadcast anti at 1×:\n$small")
+    assert(sections(small).head.exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+      case _ => false
+    }, s"expected broadcast anti at 1×:\n$small")
     // over-threshold shape (10×+ orders side): force the flip the same way
     // a big build side does, and require the shuffle anti plan
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val big = plan()
-      assert(big.contains("SortMergeJoin") && big.contains("LeftAnti"),
-        s"expected SMJ anti over the threshold:\n$big")
-      assert(!big.contains("BroadcastHashJoin"), big)
+      assert(sections(big).head.exists {
+        case j: SortMergeJoinExec => j.joinType == LeftAnti
+        case _ => false
+      }, s"expected SMJ anti over the threshold:\n$big")
+      assert(!sections(big).flatten.exists(_.isInstanceOf[BroadcastHashJoinExec]), big)
     }
   }
 
